@@ -2,11 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Engine entry point: a SparkSession wired with the graft extensions
-  * (spatial expressions + optimizer rule, vector ops) and the confs the
-  * engine is tuned for. Users of the reference switch by building their
-  * session here and calling the `graft.api` pipelines / `graft.queries`
-  * operators.
+/** The engine's one session factory. Every entry point builds here: users
+  * (`create`), the benchmark and correctness mains (`Bench`, `BenchScale`,
+  * `Verify`) and the shared test session, each chaining only its role
+  * confs (app name, warehouse dir, RPC timeouts) onto [[builder]]. Every
+  * session so carries the same SQL confs and the whole [[Natives]] table
+  * plus the spatial optimizer rule, through [[geo.GraftExtensions]].
   */
 object GraftSession {
 
@@ -31,16 +32,13 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
 
-  /** Build the session and finish runtime registrations that the
-    * extensions path can't cover (rule install on pre-existing sessions,
-    * vec_dot).
+  /** Build the session. `getOrCreate` may hand back a session that existed
+    * before (built without [[geo.GraftExtensions]]); [[Natives.ensure]]
+    * gives that one the SQL surface too.
     */
   def create(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession = {
     val spark = builder(master, shufflePartitions).getOrCreate()
-    geo.GeoClip.register(spark)
-    geo.ContainsPoint.register(spark)
-    ml.VecOps.register(spark)
-    sql.SqlTableFunctions.register(spark)
+    Natives.ensure(spark)
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

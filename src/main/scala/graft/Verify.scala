@@ -1,21 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare, and
+  * failed_queries.json (name → message) listing every query that threw, so
+  * a missing result is never a silent gap. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // see GraftSession: align WSCG fallback with the JVM's 8000-bytecode
-      // JIT limit so no stage runs as never-JIT'd interpreted bytecode
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Dev-loop filter: SPARK_GRAFT_ONLY=q129_pq_adc,q130_... runs a subset
@@ -25,11 +18,13 @@ object Verify {
     val selected = SparkEntry.queries.filter { case (name, _) =>
       only.forall(_.contains(name))
     }
+    val failed = scala.collection.mutable.LinkedHashMap[String, String]()
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failed(name) = String.valueOf(e.getMessage)
       }
       // queries that persist() an intermediate (q35, q113) would otherwise
       // pin cached blocks across the whole 110-query sweep
@@ -51,6 +46,8 @@ object Verify {
       .filter { case (k, _) => only.forall(_.contains(k)) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/failed_queries.json"),
+      failed.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
     // the contract spec drives this main inside the shared test JVM, where
     // stopping the (getOrCreate-shared) session kills every suite running
     // in parallel with it

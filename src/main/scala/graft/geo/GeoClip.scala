@@ -1,11 +1,10 @@
 package graft.geo
 
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** `st_rect_clip_area(geom, minx, miny, maxx, maxy)` — area of a polygon
@@ -17,8 +16,7 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * UDF: operates directly on the columnar `ArrayData` without
   * Row→case-class deserialization, is null-strict, and keeps the plan
   * inspectable. Holes (rings beyond the first) subtract their clipped
-  * area. Registered under both a session-extensions injector
-  * ([[GraftExtensions]]) and a runtime helper ([[GeoClip.register]]).
+  * area. SQL name declared in [[graft.Natives]].
   */
 case class RectClipArea(children: Seq[Expression])
     extends Expression with CodegenFallback {
@@ -115,41 +113,8 @@ case class RectClipArea(children: Seq[Expression])
 
 object GeoClip {
 
-  private val name = "st_rect_clip_area"
-
-  /** Runtime registration (per session). Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name),
-      new ExpressionInfo(classOf[RectClipArea].getName, name),
-      (exprs: Seq[Expression]) => RectClipArea(exprs))
-
-  /** Column API over the registered function. */
+  /** `st_rect_clip_area` over columns. */
   def rectIntersectionArea(geom: Column, minx: Column, miny: Column,
       maxx: Column, maxy: Column): Column =
-    call_function(name, geom, minx, miny, maxx, maxy)
-}
-
-/** `spark.sql.extensions=graft.geo.GraftExtensions` injector — the
-  * standing registration path for clusters; tests/pipelines can also call
-  * [[GeoClip.register]] directly on an existing session.
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("st_rect_clip_area"),
-      new ExpressionInfo(classOf[RectClipArea].getName, "st_rect_clip_area"),
-      (exprs: Seq[Expression]) => RectClipArea(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("st_contains_point"),
-      new ExpressionInfo(classOf[ContainsPoint].getName, "st_contains_point"),
-      (exprs: Seq[Expression]) => ContainsPoint(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("st_simplify"),
-      new ExpressionInfo(classOf[StSimplify].getName, "st_simplify"),
-      (exprs: Seq[Expression]) => StSimplify(exprs)))
-    ext.injectOptimizerRule(_ => SpatialFilterRule)
-    // the curation library's SQL surface (table-valued entry points)
-    graft.sql.SqlTableFunctions.inject(ext)
-  }
+    ColumnBridge.call(RectClipArea(_), geom, minx, miny, maxx, maxy)
 }

@@ -1,13 +1,13 @@
 package graft.ml
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType}
+import org.apache.spark.sql.graft.ColumnBridge
 
 /** Johnson-Lindenstrauss sign-projection sketch for embedding columns:
   * y_j = Σ_i w_i · s(i,j) with s ∈ {±1} drawn from md5("jl#i#j") — the
@@ -39,24 +39,14 @@ object RandomProjection {
     }
   }
 
-  private val fnName = "graft_jl_sketch"
-
-  /** Runtime registration (idempotent), the VecOps discipline. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(fnName),
-      new ExpressionInfo(classOf[JlSketch].getName, fnName),
-      (children: Seq[Expression]) => JlSketch(children))
-
   /** Adds column `jl`: array<long> of length `outDims`. */
   def sketch(vecs: DataFrame, colName: String, dims: Int,
       outDims: Int): DataFrame = {
     require(dims >= 1 && outDims >= 1 && outDims <= dims,
       s"bad dims: $dims -> $outDims")
-    register(vecs.sparkSession)
     val flat = signMatrix(dims, outDims).flatten.toSeq
-    vecs.withColumn("jl",
-      call_function(fnName, col(colName), typedLit(flat), lit(outDims)))
+    vecs.withColumn("jl", ColumnBridge.call(JlSketch(_),
+      col(colName), typedLit(flat), lit(outDims)))
   }
 }
 
@@ -71,7 +61,7 @@ case class JlSketch(children: Seq[Expression])
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = true
 
-  // registered in the session function registry, so raw-SQL callers can
+  // SQL-named in graft.Natives, so raw-SQL callers can
   // hand it anything — fail at ANALYSIS with a readable message, not at
   // runtime with a ClassCastException
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {

@@ -3,12 +3,13 @@ package org.apache.spark.sql.graft
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 
-/** Registry-free Expression→Column wrap (`ExpressionUtils.column` is
-  * private[sql]). The session-function registry route (`call_function`,
-  * the GeoClip/BpeEncode discipline) needs an explicit `register(spark)`
-  * at every entry point; library-level scalar chains like
-  * [[graft.text.WebText.htmlText]] are built WITHOUT a session at hand,
-  * so their native expressions wrap directly. Same justified
+/** Registry-free Expression↔Column wrap (`ExpressionUtils.column` is
+  * private[sql]). Every Scala column helper over an engine native
+  * (`VecOps.dot`, `TextSketch.minhashSig`, `ContainsPoint.apply`, ...)
+  * builds its expression here instead of naming it through the session
+  * function registry, so it works on any session and from pure Column
+  * chains with no session at hand ([[graft.text.WebText.htmlText]]). The
+  * SQL names of the same natives live in [[graft.Natives]]. Same justified
   * package-escape shape as [[org.apache.spark.graft.ListenerDrain]].
   */
 object ColumnBridge {
@@ -17,4 +18,8 @@ object ColumnBridge {
 
   def expression(c: Column): Expression =
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
+
+  /** `build(args)` as a column: a native over the given argument columns. */
+  def call(build: Seq[Expression] => Expression, args: Column*): Column =
+    column(build(args.map(expression)))
 }

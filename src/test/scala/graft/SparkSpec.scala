@@ -21,13 +21,7 @@ object SparkSpec {
   private var cached: SparkSession = _
   def session: SparkSession = synchronized {
     if (cached == null || cached.sparkContext.isStopped) {
-      cached = SparkSession.builder()
-        .master("local[4]")
-        .appName("graft-test")
-        .config("spark.sql.shuffle.partitions", 4)
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
+      cached = GraftSession.builder("local[4]", 4).appName("graft-test").getOrCreate()
       cached.sparkContext.setLogLevel("WARN")
     }
     cached

@@ -4,7 +4,8 @@ import java.nio.file.{Files, Paths}
 
 /** Guards the driver contract itself: Verify.main must produce a parquet
   * dir per query plus a parseable oracle_sql.json whose keys match the
-  * query registry (the driver's DuckDB gate reads exactly these).
+  * query registry (the driver's DuckDB gate reads exactly these), and an
+  * empty failed_queries.json.
   */
 class VerifyContractSpec extends SparkSpec {
 
@@ -27,5 +28,8 @@ class VerifyContractSpec extends SparkSpec {
     }
     // no raw control characters leaked into the JSON (would break json.load)
     assert(!json.exists(c => c < ' '))
+    val failed = new String(
+      Files.readAllBytes(Paths.get(s"$out/failed_queries.json")), "UTF-8")
+    assert(failed == "{}", s"queries failed in Verify: $failed")
   }
 }

@@ -1,6 +1,7 @@
 package graft.geo
 
 import graft.SparkSpec
+import org.apache.spark.sql.catalyst.rules.RuleExecutor
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -11,7 +12,6 @@ class SpatialFilterRuleSpec extends SparkSpec {
     Seq(2.0, 2.0), Seq(8.0, 2.0), Seq(8.0, 6.0), Seq(2.0, 6.0), Seq(2.0, 2.0)))
 
   test("constant-polygon containment filter gains parquet-pushed envelope predicates") {
-    ContainsPoint.register(spark)
     val dir = Files.createTempDirectory("spatial_rule").toString + "/pts"
     (0 until 100).map(i => (i.toDouble % 10, (i / 10).toDouble, i))
       .toDF("x", "y", "id").write.parquet(dir)
@@ -36,13 +36,24 @@ class SpatialFilterRuleSpec extends SparkSpec {
     assert(actual.nonEmpty)
   }
 
-  test("rule is idempotent across repeated optimization") {
-    ContainsPoint.register(spark)
-    ContainsPoint.register(spark) // double-install must not duplicate the rule
+  test("factory session carries the rule only in the extension's batches") {
+    val s = graft.GraftSession.create("local[4]", shufflePartitions = 4)
+    assert(s.experimental.extraOptimizations.isEmpty)
+    // RuleExecutor.batches is protected; read the batch names reflectively
+    val optimizer = s.sessionState.optimizer
+    val batches = classOf[RuleExecutor[_]].getMethod("batches").invoke(optimizer)
+      .asInstanceOf[Seq[AnyRef]]
+    def field(b: AnyRef, name: String) = b.getClass.getMethod(name).invoke(b)
+    val carrying = batches.collect {
+      case b if field(b, "rules").asInstanceOf[Seq[AnyRef]].contains(SpatialFilterRule) =>
+        field(b, "name").asInstanceOf[String]
+    }
+    assert(carrying.nonEmpty && carrying.forall(_.startsWith("Operator Optimization")),
+      s"SpatialFilterRule outside the extension's batches: $carrying")
+    assert(optimizer.extendedOperatorOptimizationRules.count(_ == SpatialFilterRule) == 1)
     val pts = Seq((3.0, 3.0, 1), (9.0, 9.0, 2)).toDF("x", "y", "id")
     val r = pts.filter(ContainsPoint(typedlit(poly), col("x"), col("y")))
       .select("id").as[Int].collect().toSeq
     assert(r == Seq(1))
-    assert(spark.experimental.extraOptimizations.count(_ == SpatialFilterRule) == 1)
   }
 }

@@ -13,9 +13,6 @@ import org.apache.spark.sql.functions._
 class SqlSurfaceSpec extends SparkSpec {
   import spark.implicits._
 
-  SqlTableFunctions.register(spark)
-  SqlTableFunctions.register(spark) // idempotent
-
   private def words(prefix: String, n: Int): String =
     (0 until n).map(i => s"$prefix$i").mkString(" ")
 

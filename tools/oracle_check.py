@@ -4,8 +4,10 @@
 Usage: python3 tools/oracle_check.py [sfDir] [outDir]
 
 Runs nothing itself — expects `graft.Verify` to have populated outDir
-(spark results + oracle_sql.json). For each query: loads the Spark parquet
-result, runs the oracle SQL in DuckDB over the same sfDir tables, sorts
+(spark results + oracle_sql.json + failed_queries.json). First prints every
+query Verify recorded as failed; any listed failure fails the check. Then,
+for each query with an oracle: loads the Spark parquet result, runs the
+oracle SQL in DuckDB over the same sfDir tables, sorts
 columns by name and rows by all columns, and compares values exactly
 (with a near-miss report for floats so rounding bugs are diagnosable).
 
@@ -93,6 +95,10 @@ def main():
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     with open(f"{out_dir}/oracle_sql.json") as f:
         oracles = json.load(f)
+    with open(f"{out_dir}/failed_queries.json") as f:
+        failed = json.load(f)
+    for name, msg in sorted(failed.items()):
+        print(f"FAIL {name}: Verify: {msg}")
 
     n_pass = n_fail = 0
     for name, sql in sorted(oracles.items()):
@@ -154,8 +160,8 @@ def main():
                     else:
                         print(f"    {c}: {x!r} vs {y!r}")
             n_fail += 1
-    print(f"\n{n_pass} pass, {n_fail} fail")
-    sys.exit(1 if n_fail else 0)
+    print(f"\n{n_pass} pass, {n_fail} fail, {len(failed)} failed in Verify")
+    sys.exit(1 if n_fail or failed else 0)
 
 
 if __name__ == "__main__":
